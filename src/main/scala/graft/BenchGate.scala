@@ -408,7 +408,7 @@ object BenchGate {
               (if (cluster) s"a ${flags.size}-query cluster"
                else "uniform median inflation") +
               "; re-measure at the next quiet " +
-              "window (runMain graft.OutlierRemeasure) before trusting " +
+              "window (runMain graft.Dev time) before trusting " +
               "this sample"
           })
         else
@@ -482,7 +482,7 @@ object BenchGate {
       // mistaken for (or recorded as) a clean sample
       println(s"BENCHGATE ADJUDICATED (not ok): per-query flags demoted as " +
         "host contention — re-measure on a quiet window " +
-        "(runMain graft.OutlierRemeasure); this sample is not canonical-grade")
+        "(runMain graft.Dev time); this sample is not canonical-grade")
       sys.exit(2)
     } else if (flags.isEmpty && breaches.isEmpty) {
       println(f"BENCHGATE ok: ${latest.size} queries within ${RatioGate}x of canonical " +

@@ -88,8 +88,8 @@ object Fence {
     * materializing job (r19 optimization round). The iterative
     * operators' per-round shape was fence + `count()` — the count a
     * second, separately planned Catalyst action (~170 ms planning
-    * floor, JobFloor) over a frame whose cardinality the fence job
-    * just computed. Local mode rides
+    * floor, OPTIMIZATION_r19.md "the per-action floor") over a frame
+    * whose cardinality the fence job just computed. Local mode rides
     * `bridge.localCheckpointWithCount` (the Dataset.checkpoint
     * construction with the eager materialization as `rdd.count()`);
     * reliable mode keeps `Dataset.checkpoint` untouched and counts
@@ -111,8 +111,8 @@ object Fence {
     * the layout VISIBLE to downstream planning. Under AQE the
     * checkpoint capture reports `UnknownPartitioning` (the adaptive
     * plan's partitioning is not resolvable at capture time — measured
-    * r19, PartProbe), so every downstream groupBy/join re-exchanges a
-    * frame that is already laid out correctly. Disabling AQE for JUST
+    * r19, OPTIMIZATION_r19.md §4), so every downstream groupBy/join
+    * re-exchanges a frame that is already laid out correctly. Disabling AQE for JUST
     * the repartition+checkpoint action records the exact
     * `hashpartitioning(keys, n)` on the LogicalRDD; consumers (with
     * AQE back on) then satisfy any ClusteredDistribution over a

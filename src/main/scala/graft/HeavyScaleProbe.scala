@@ -265,12 +265,6 @@ object HeavyScaleProbe {
       "q_sketch_heavy" ->
         ((s, d) => graft.queries.SketchQueries.heavySketch(s, d)))
 
-  /** Materializes (once) and returns the synthetic-sf1 directory —
-    * shared with PigeonholeKnobProbe. */
-  private[graft] def ensureSf1(spark: SparkSession): String = {
-    synthesize(spark); Dst
-  }
-
   /** The itemset queries need a DIFFERENT sf1 than the token-suffixed
     * corpus: suffixed copies share no tokens, so a 10× corpus raises
     * minsup 10× while every token's df stays per-copy — F₁ goes EMPTY

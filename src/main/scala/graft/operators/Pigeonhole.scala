@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   * widens the effective key to (s−h)·bits/s bits at C(s, s−h)-fold
   * banding fanout: recall stays EXACT (≥ s−h clean segments ⇒ at
   * least one clean (s−h)-subset), while collision mass drops
-  * exponentially in the added key width. PigeonholeKnobProbe measures
-  * the trade on the real signature corpus (PLANS.md).
+  * exponentially in the added key width. PLANS.md "Round-10:
+  * pigeonhole segment-width knob — measured" records the trade on the
+  * real signature corpus.
   *
   * Shared by `q_dedup_simhash_pairs` (32-bit text simhash) and
   * `q_dedup_phash` (64-bit image dHash) — the segmentation is pure

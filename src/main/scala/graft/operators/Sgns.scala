@@ -163,7 +163,8 @@ object Sgns {
     // ONE planned-and-codegen'd plan serves ALL iterations (r19 third
     // cut). The per-iteration Catalyst action was the dominant cost —
     // each collect() paid the ~170 ms analyze/optimize/codegen floor
-    // (JobFloor) for a plan whose ONLY change was the fresh broadcast
+    // (OPTIMIZATION_r19.md "Key systemic measurement: the per-action
+    // floor") for a plan whose ONLY change was the fresh broadcast
     // handle. The model now reaches the fixed plan through a mutable
     // [[graft.functions.VecBcHolder]] riding the codegen references
     // array: the scheduler re-serializes the task binary at every job

@@ -14,8 +14,8 @@ import graft.Fence.FenceOps
   * under this orientation are bounded by O(√m), giving O(m^1.5) wedge
   * work worst-case — a hub vertex of degree d contributes nothing
   * (all its edges point AT it) instead of the d² wedges the naive
-  * per-vertex enumeration pays. [[naiveCount]] keeps that Σdeg² form
-  * for the probe that demonstrates the gap (TriangleScaleProbe).
+  * per-vertex enumeration pays; PLANS.md "Triangle-counting scale
+  * probe (round 4)" records the measured gap on the wheel graph.
   *
   * The (degree, id) total order is carried ON the edge endpoints
   * (lexicographic compares in the join conditions) rather than
@@ -50,26 +50,6 @@ object Triangles {
       .where(col("bd") < col("cd") || (col("bd") === col("cd") && col("b") < col("c")))
       .join(e3, Seq("b", "c"), "left_semi")
       .agg(count(lit(1)).cast("long").as("n_triangles"))
-    val nNodes = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
-    val nEdges = pairs.agg(count(lit(1)).cast("long").as("n_edges"))
-    nNodes.crossJoin(nEdges).crossJoin(tri)
-  }
-
-  /** Naive per-vertex wedge enumeration (Σdeg² work; each triangle
-    * found 3× and divided out). Correct, and the right baseline to
-    * measure the orientation against — NOT the scale path. */
-  def naiveCount(pairs: DataFrame): DataFrame = {
-    val sym = pairs.select(col("u").as("a"), col("v").as("b"))
-      .union(pairs.select(col("v").as("a"), col("u").as("b")))
-      .fenced() // both wedge sides
-    val w1 = sym.select(col("a"), col("b"))
-    val w2 = sym.select(col("a"), col("b").as("c"))
-    val close = pairs.select(col("u").as("b"), col("v").as("c"))
-    val tri = w1.join(w2, Seq("a"))
-      .where(col("b") < col("c")) // each unordered wedge once per center
-      .join(close, Seq("b", "c"), "left_semi")
-      .agg((count(lit(1)) / 3).cast("long").as("n_triangles"))
-    val deg = degrees(pairs)
     val nNodes = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
     val nEdges = pairs.agg(count(lit(1)).cast("long").as("n_edges"))
     nNodes.crossJoin(nEdges).crossJoin(tri)

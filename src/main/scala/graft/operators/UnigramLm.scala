@@ -326,7 +326,10 @@ object UnigramLm {
     }
     def estep(m: Model): Map[String, Long] = {
       slot.bc = spark.sparkContext.broadcast(m)
-      val merged = countPartials.reduce { (a, b) =>
+      // fold, not reduce: a zero-partition word table merges to an
+      // empty count map instead of failing with "empty collection"
+      val merged = countPartials.fold(
+          scala.collection.mutable.HashMap.empty[String, Long]) { (a, b) =>
         b.foreach { case (p, c) => a.update(p, a.getOrElse(p, 0L) + c) }
         a
       }
@@ -512,7 +515,8 @@ object UnigramLm {
     }
     def estepSoft(m: Model): Map[String, Long] = {
       slot.bc = spark.sparkContext.broadcast(m)
-      val merged = countPartials.reduce { (a, b) =>
+      val merged = countPartials.fold(scala.collection.mutable.HashMap
+          .empty[String, java.math.BigInteger]) { (a, b) =>
         b.foreach { case (p, c) => a.update(p, a.get(p).fold(c)(_.add(c))) }
         a
       }

@@ -92,8 +92,9 @@ object GraphQueries {
     *
     * The count is [[graft.operators.Triangles.orientedCount]] —
     * DEGREE-ORDERED ORIENTATION, O(m^1.5) wedge work worst-case
-    * instead of Σdeg²; TriangleScaleProbe measures the gap against
-    * the naive enumeration on the adversarial wheel graph.
+    * instead of Σdeg²; PLANS.md "Triangle-counting scale probe
+    * (round 4)" records the gap against the naive enumeration on the
+    * adversarial wheel graph.
     *
     * All-integer counts: no float anywhere, the oracle hash is exact.
     * Scale shape: the pair derivation self-joins the filtered fact
@@ -626,7 +627,7 @@ object GraphQueries {
 
   /** Train at the shipped operating point and build the separation
     * means frame (co-occurring vs hash-random mean cosine) — shared
-    * by the ○ queries and EmbedSepProbe's margin diagnostics. */
+    * by the ○ queries. */
   private[graft] def sgnsTrainAndSep(s: SparkSession, rawPairs: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import graft.operators.Sgns
@@ -656,7 +657,7 @@ object GraphQueries {
     // graph (sf0.001: 4 nodes) every "random" partner IS a true
     // neighbor — the old contrast compared two samples of the same
     // population and its sign was noise (measured −0.008 on 13
-    // pairs; EmbedSepProbe).
+    // pairs; PLANS.md "Round-16 (cont.): embed separation verdict").
     val coSet = pairs.select(col("center").as("ca"), col("context").as("cb"))
     val rndNeg = rnd.join(coSet,
       (col("node") === col("ca") && col("partner") === col("cb")) ||

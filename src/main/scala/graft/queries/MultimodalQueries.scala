@@ -130,10 +130,10 @@ object MultimodalQueries {
     * `q_dedup_simhash_pairs`). */
   /** Unique banded CANDIDATE pairs (a_id < b_id, ≥ 1 bit-identical
     * segment, deduped to the first matching segment) BEFORE the
-    * Hamming verify, with both signatures attached — split out so the
-    * scale probe ([[graft.MediaScaleProbe]]) can measure the
-    * candidate volume the pigeonhole join generates against the
-    * all-pairs count it avoids. */
+    * Hamming verify, with both signatures attached. PLANS.md
+    * "Media-family scale probe (round 9)" records the candidate
+    * volume the pigeonhole join generates against the all-pairs
+    * count it avoids. */
   /** (doc_id, phash) over the textured corpus — ONE decode pass,
     * checkpointed so every consumer joins the 16-byte/row signature
     * table instead of re-decoding. */
@@ -196,10 +196,11 @@ object MultimodalQueries {
     * every 2-subset of 6 segments concatenated, ~21-bit join keys) —
     * the measured knob for corpora where the default banding's random
     * collision mass pushes the verify stage to dominance
-    * (PigeonholeKnobProbe: 3.5× fewer collisions for 3× banding
-    * fanout at sf1, PLANS.md round 10). Exact recall is a theorem
-    * (≥ s−h clean segments ⇒ one clean 2-subset), so the oracle is
-    * UNCHANGED — the identical all-pairs SQL as `q_dedup_phash`; a
+    * (3.5× fewer collisions for 3× banding fanout at sf1, PLANS.md
+    * "Round-10: pigeonhole segment-width knob — measured"). Exact
+    * recall is a theorem (≥ s−h clean segments ⇒ one clean 2-subset),
+    * so the oracle is UNCHANGED — the identical all-pairs SQL as
+    * `q_dedup_phash`; a
     * hash match proves the widened candidate generation loses no
     * pair. K-fold candidate hits dedup by first matching combo, the
     * same codegen predicate pattern as the default banding. */

@@ -758,13 +758,12 @@ object TextQueries {
   private[graft] val VocabCutoffs = Seq(5, 10, 20, 30)
   private[graft] val VocabMax = 30
 
-  /** The coverage plan from a (lang, term, n) counts frame — shared
-    * verbatim by `q_vocab_coverage` (VocabMax = 30, oracle-checked)
-    * and VocabScaleProbe (VocabMax = 32k on a synthesized vocabulary,
-    * pinning that the shortlist still broadcasts at realistic
-    * tokenizer sizes and the full vocabulary is never globally
-    * sorted). Keeping ONE implementation means the probe can never
-    * drift from the plan the oracle certifies. */
+  /** The coverage plan from a (lang, term, n) counts frame, used by
+    * `q_vocab_coverage` (VocabMax = 30, oracle-checked). The same plan
+    * at VocabMax = 32k on a synthesized vocabulary still broadcasts
+    * its shortlist and never sorts the full vocabulary globally
+    * (PLANS.md "Vocab-coverage at a realistic vocabulary (round 6)").
+    */
   private[graft] def coveragePlan(lt: DataFrame, vocabMax: Int,
       cutoffs: Seq[Int]): DataFrame = {
     val session = lt.sparkSession

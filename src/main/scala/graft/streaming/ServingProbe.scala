@@ -77,15 +77,7 @@ object ServingProbe {
     } finally q.stop()
   }
 
-  /** Standalone run: `runMain graft.streaming.ServingProbe [sfDir]`. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(logLevel = "ERROR")
-    val r = run(spark, sfDir)
-    println(f"SERVING free=${r.freeEps}%.0f eps stalled=${r.stalledEps}%.0f eps ratio=${r.ratio}%.2f p50=${r.p50Ms}%.1f ms p99=${r.p99Ms}%.1f ms")
-    spark.stop()
-  }
-
+  /** Standalone run: `runMain graft.Dev serving [sfDir]`. */
   def run(spark: SparkSession, sfDir: String, rowsPerBatch: Long = 20000L,
       warmupSec: Int = 4, measureSec: Int = 10): Result = {
     val es = EventServer.start()

@@ -17,8 +17,9 @@ object bridge {
     * (CC, k-core/k-truss peels, label-prop ladders) fence a frame per
     * round and then immediately `count()` it to drive convergence /
     * layout sizing — a second, separately PLANNED Catalyst action
-    * (~170 ms on the measured planning floor, graft.JobFloor) whose
-    * answer the fence's own materializing job already produced. This
+    * (~170 ms on the measured planning floor, OPTIMIZATION_r19.md
+    * "the per-action floor") whose answer the fence's own
+    * materializing job already produced. This
     * replicates `Dataset.checkpoint(eager=true, reliable=false)`
     * byte-for-byte — `executedPlan.execute().map(_.copy())`,
     * `rdd.localCheckpoint()`, eager materialization,

@@ -104,6 +104,15 @@ class SgnsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("MaxVocab"), e.getMessage)
   }
 
+  test("an empty pair table fails with the named vocabulary error " +
+      "before any training job") {
+    val e = intercept[IllegalArgumentException] {
+      Sgns.fit(Seq.empty[(Long, Long, Long)].toDF("center", "context", "wt"),
+        dim = Dim, iters = 1, negK = NegK, lr = Lr)
+    }
+    assert(e.getMessage.contains("need at least 2 nodes, got 0"), e.getMessage)
+  }
+
   test("training loss decreases") {
     val (_, losses) = Sgns.fit(
       toyPairs.toDF("center", "context", "wt"), dim = Dim, iters = 6,

@@ -326,6 +326,18 @@ class UnigramLmSpec extends AnyFunSuite {
       s"no compression: $nPieces pieces over $nChars chars")
   }
 
+  test("E-steps over a zero-partition word table merge to empty counts " +
+      "instead of failing with \"empty collection\"") {
+    val wf = Seq.empty[(String, Long)].toDF("w", "f")
+    assert(wf.rdd.getNumPartitions == 0, "fixture must have no partitions")
+    val prep = UnigramLm.Prepared(wf, Seq("a" -> 3L, "ab" -> 2L, "b" -> 1L))
+    // no piece is counted, so only the single-character closure floor
+    // survives both trainers
+    for (m <- Seq(UnigramLm.fitPrepared(prep, targetV = 2, iters = 1),
+        UnigramLm.softFitPrepared(prep, targetV = 2, iters = 1)))
+      assert(m.pieces.toSeq == Seq("a", "b"))
+  }
+
   test("STREAMED apply equals the batch encode across micro-batch " +
       "splits — a fixed model makes tokenization a stateless mark " +
       "(the StreamingLogreg stance, no new stream operator)") {
