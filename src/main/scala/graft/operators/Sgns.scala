@@ -243,6 +243,14 @@ object Sgns {
         val acc = tgt.getOrElseUpdate(row.getLong(1), new GradAcc(d))
         var j = 0
         while (j < d) {
+          // a null addend means an example lost its model vector: the
+          // skeleton scan of `pairs` saw a node (or a null) that the
+          // vocabulary scan did not
+          if (row.isNullAt(2 + j))
+            throw new IllegalStateException("Sgns.fit: null gradient " +
+              "addend — `pairs` changed between fit's vocabulary and " +
+              "skeleton scans; fit requires a deterministic pairs frame " +
+              "(fence it before calling)")
           acc.g(j) = acc.g(j).add(row.getDecimal(2 + j, 38, 12).toJavaBigDecimal)
           j += 1
         }

@@ -3,28 +3,30 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.queries.SimilarityQueries
+import graft.operators.Ivf
 
 /** Streaming ANN SERVING over the persisted IVF index — the
   * [[StreamingRerank]] shape applied to the vector index: the index
-  * is built ONCE (trained centroids + a durable cell-partitioned
+  * is built ONCE (coarse centroids + a durable cell-partitioned
   * posting store), then every micro-batch of arriving query vectors
-  * runs the IDENTICAL shared serving tail
-  * (`SimilarityQueries.ivfServe` — probe selection over the
+  * runs the IDENTICAL shared serving path
+  * ([[graft.operators.Ivf.serve]] — probe selection over the
   * k-bounded centroid table, literal cell filter pruning the store
-  * scan, exact-cosine top-k).
+  * scan, codec scoring, top-k).
   *
   * Stream ≡ batch per prefix, by construction: the serving tail is
   * PER-QUERY INDEPENDENT (the model and store are fixed at build
   * time; a query's answer never depends on other queries), so
   * serving any micro-batch split of a query set accumulates exactly
   * the batch answers for those queries — PersistedIvfSpec pins the
-  * accumulated stream output row-for-row against
-  * `knnIvfPersisted`'s.
+  * accumulated stream output row-for-row against the batch query of
+  * each codec.
   *
   * Delivery contract: one row per query (the whole vector rides in
-  * one column), so nothing can split across batches; no cross-batch
-  * state, clean restart from any checkpoint. Per-batch work is
+  * one column), so nothing can split across batches; a vec_id that
+  * repeats within a batch is served once (two different vectors under
+  * one vec_id fail the batch by name); no cross-batch state, clean
+  * restart from any checkpoint. Per-batch work is
   * |batch queries|-scale against the pruned store scan — the
   * serving-latency shape of a production ANN stack: corpus work at
   * index-build time, per-query work proportional to the probed
@@ -69,56 +71,35 @@ object StreamingIvf {
     * @param maxBatchQueries the [[MaxBatchQueries]] ceiling —
     *   parameterized so the guard spec can trip it at test scale;
     *   production callers keep the default
-    * @param mode the posting-store/serving pair (rounds 18–19 — the
-    *   full serving matrix over one stream contract):
-    *   - `"full"`: double vectors, exact-cosine rerank
-    *     ([[SimilarityQueries.ivfBuildStore]]/`ivfServe`);
-    *   - `"q8"`: int8 codes + norm, quantized-cosine ranking with
+    * @param codec the posting-row codec ([[Ivf.Codec]]), which also
+    *   fixes the index's coarse cells:
+    *   - `Full`: double vectors, exact-cosine scoring, trained cells
+    *     (batch twin `q_knn_ivf_persisted`);
+    *   - `Q8`: int8 codes + norm, quantized-cosine scoring with
     *     driver-quantized queries — 8× fewer store bytes per probe
-    *     (`ivfBuildStoreQ8`/`ivfServeQ8`);
-    *   - `"pq"`: 4 PQ code bytes + norm per row, driver-LUT ADC
+    *     (`q_knn_ivf_q8`);
+    *   - `Pq`: 4 PQ code bytes + norm per row, driver-LUT ADC
     *     shortlist + exact point-read rerank — the FAISS IVFPQ
-    *     serving shape (`ivfBuildStorePq` + the grade-free
-    *     `ivfServePqLean` tail);
-    *   - `"pq_r"`: the same 12 B/vec with RESIDUAL-encoded codes
-    *     (FAISS by_residual=true — the measured recall winner of
-    *     `q_ann_mode_compare`: 0.90 vs 0.82 at equal bytes):
-    *     `ivfBuildStorePqR` + `ivfServePqLean` under the residual
-    *     [[SimilarityQueries.PqModel]].
-    *   Every mode emits the SAME (q_id, n_id, rn, sim) sink schema
-    *   (r18 advice — the pq leg used to add a grading `hit` column
-    *   and recompute the brute truth per micro-batch; serving is now
-    *   grade-free, model collected once at stream start). The
-    *   store-lifetime/reclamation contract is identical across
-    *   modes — only the build and serve tails swap. */
+    *     serving shape, literal cells (`q_knn_ivf_pq_store`);
+    *   - `PqR`: the same 12 B/vec with RESIDUAL-encoded codes (FAISS
+    *     by_residual=true — the measured recall winner of
+    *     `q_ann_mode_compare`: 0.90 vs 0.82 at equal bytes;
+    *     `q_knn_ivf_pq_r`).
+    *   Every codec emits the SAME grade-free (q_id, n_id, rn, sim) sink
+    *   schema, collects its model once at stream start, and follows
+    *   the same store-lifetime/reclamation contract. */
   def start(spark: SparkSession, queries: DataFrame, sfDir: String,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
       maxBatchQueries: Int = MaxBatchQueries,
-      mode: String = "full")(
+      codec: Ivf.Codec = Ivf.Codec.Full)(
       sink: DataFrame => Unit): StreamingQuery = {
     require(maxBatchQueries >= 1, s"maxBatchQueries=$maxBatchQueries")
-    require(Set("full", "q8", "pq", "pq_r")(mode),
-      s"mode=$mode (expected full | q8 | pq | pq_r)")
     val kind = s"ivfserve${gen.incrementAndGet()}"
     // index build + model load happen ONCE, at stream start: the
-    // per-batch closure touches only the (store, model) pair
-    val (store, cents) = mode match {
-      case "q8" => SimilarityQueries.ivfBuildStoreQ8(spark, sfDir, kind = kind)
-      case "pq" =>
-        (SimilarityQueries.ivfBuildStorePq(spark, sfDir, kind = kind),
-          Array.empty[Array[Double]])
-      case "pq_r" =>
-        (SimilarityQueries.ivfBuildStorePqR(spark, sfDir, kind = kind),
-          Array.empty[Array[Double]])
-      case _ => SimilarityQueries.ivfBuildStore(spark, sfDir, kind = kind)
-    }
-    val pqModel = mode match {
-      case "pq" => SimilarityQueries.loadPqModel(spark, sfDir)
-      case "pq_r" => SimilarityQueries.loadPqRModel(spark, sfDir)
-      case _ => null
-    }
-    store.count(): Unit // force the store write at build time
+    // per-batch closure touches only the built index
+    val ix = Ivf.build(spark, sfDir, codec, kind)
+    ix.store.count(): Unit // force the store write at build time
     val q = queries.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -137,12 +118,7 @@ object StreamingIvf {
             "batch driver-side (the nprobe/C serving design); this is a " +
             "serving stream, not a corpus channel — throttle the " +
             "producer or split the batch upstream")
-        if (qs.nonEmpty) sink(mode match {
-          case "q8" => SimilarityQueries.ivfServeQ8(store, cents, qs)
-          case "pq" | "pq_r" =>
-            SimilarityQueries.ivfServePqLean(spark, sfDir, store, qs, pqModel)
-          case _ => SimilarityQueries.ivfServe(store, cents, qs)
-        })
+        if (qs.nonEmpty) sink(Ivf.serve(ix, qs.toSeq))
       }
       .start()
     // Store-RECLAMATION half of the lifetime contract (r16 advice):

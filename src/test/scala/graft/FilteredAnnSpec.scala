@@ -20,9 +20,9 @@ class FilteredAnnSpec extends AnyFunSuite {
       "PartitionFilters (probed cells) AND a pushed label predicate " +
       "(PushedFilters) — the predicate evaluates at the scan, not " +
       "after the join") {
-    val store = SimilarityQueries.ivfBuildStoreFlt(spark, TestSpark.Sf,
-      "ivffltspec")
-    val pre = SimilarityQueries.fltCandidates(spark, TestSpark.Sf, store)
+    val ix = SimilarityQueries.fltIndex(spark, TestSpark.Sf, "ivffltspec")
+    val pre = SimilarityQueries.fltCandidates(ix,
+        graft.operators.Ivf.queries(spark, TestSpark.Sf))
       .where(col("label") === SimilarityQueries.FltLabel)
     pre.count()
     val plan = pre.queryExecution.executedPlan.toString

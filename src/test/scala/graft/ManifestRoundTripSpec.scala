@@ -90,7 +90,7 @@ class ManifestRoundTripSpec extends AnyFunSuite {
   }
 
   test("embed: chained band-manifest ingests equal q_dedup_embed_lsh's pair set") {
-    val e = SimilarityQueries.vectors(spark, Sf)
+    val e = graft.operators.Ivf.vectors(spark, Sf)
     val n = e.count()
     val (s1, s2) = ((3L * n) / 5L, (4L * n) / 5L)
     val bands = SimilarityQueries.bandRows(e)
@@ -133,7 +133,7 @@ class ManifestRoundTripSpec extends AnyFunSuite {
       "bucket-aligned, and the grown manifest answers the next ingest " +
       "identically to a rebuilt one") {
     import graft.operators.Bucketing
-    val e = SimilarityQueries.vectors(spark, Sf)
+    val e = graft.operators.Ivf.vectors(spark, Sf)
     val n = e.count()
     val (s1, s2) = ((3L * n) / 5L, (4L * n) / 5L)
     val bands = SimilarityQueries.bandRows(e)
@@ -176,7 +176,7 @@ class ManifestRoundTripSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
-    val e = SimilarityQueries.vectors(spark, Sf)
+    val e = graft.operators.Ivf.vectors(spark, Sf)
     val n = e.count()
     val split = (3L * n) / 5L
     val bands = SimilarityQueries.bandRows(e)

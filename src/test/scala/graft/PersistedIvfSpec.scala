@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Ivf
+import graft.operators.Ivf.Codec
 import graft.queries.SimilarityQueries
 
 /** The persisted IVF index: durable partitioned posting lists whose
@@ -99,13 +101,14 @@ class PersistedIvfSpec extends AnyFunSuite {
     // frozen centroids: re-derive the prior-trained model exactly as
     // the incremental build does (KMeans is deterministic)
     val split = (4L * Tables(spark, TestSpark.Sf, "embeddings").count() + 4L) / 5L
-    val prior = SimilarityQueries.vectors(spark, TestSpark.Sf)
+    val prior = Ivf.vectors(spark, TestSpark.Sf)
       .where(col("vec_id") < split)
     val (_, cents, _) = graft.operators.KMeans.fit(
       prior.select(col("vec_id"), col("v")),
-      k = SimilarityQueries.IvfC, maxIter = 5)
-    val served = SimilarityQueries.ivfServe(compacted, cents,
-        SimilarityQueries.ivfQueries(spark, TestSpark.Sf))
+      k = Ivf.IvfC, maxIter = 5)
+    val served = Ivf.serve(Ivf.Index(Codec.Full, Ivf.Trained, compacted,
+        Ivf.centroids(cents), Nil, TestSpark.Sf),
+        Ivf.queries(spark, TestSpark.Sf))
       .as[(Long, Long, Int, Double)].collect().toSeq
     assert(live.nonEmpty && served == live,
       "compaction changed served answers")
@@ -164,14 +167,15 @@ class PersistedIvfSpec extends AnyFunSuite {
       .select(col("list").cast("int").as("list"), col("vec_id"), col("v"))
     val split =
       (4L * Tables(spark, TestSpark.Sf, "embeddings").count() + 4L) / 5L
-    val prior = SimilarityQueries.vectors(spark, TestSpark.Sf)
+    val prior = Ivf.vectors(spark, TestSpark.Sf)
       .where(col("vec_id") < split)
     val (_, cents, _) = graft.operators.KMeans.fit(
       prior.select(col("vec_id"), col("v")),
-      k = SimilarityQueries.IvfC, maxIter = 5)
-    val served = SimilarityQueries.ivfServe(
-        newBase.union(delta.where(!flagged(col("list")))), cents,
-        SimilarityQueries.ivfQueries(spark, TestSpark.Sf))
+      k = Ivf.IvfC, maxIter = 5)
+    val served = Ivf.serve(Ivf.Index(Codec.Full, Ivf.Trained,
+        newBase.union(delta.where(!flagged(col("list")))),
+        Ivf.centroids(cents), Nil, TestSpark.Sf),
+        Ivf.queries(spark, TestSpark.Sf))
       .as[(Long, Long, Int, Double)].collect().toSeq
     assert(live.nonEmpty && served == live,
       "executing the maintenance plan changed served answers")
@@ -184,7 +188,7 @@ class PersistedIvfSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val batch = SimilarityQueries.knnIvfPersisted(spark, TestSpark.Sf)
       .as[(Long, Long, Int, Double)].collect().toSeq
-    val qs = SimilarityQueries.ivfQueries(spark, TestSpark.Sf).toSeq
+    val qs = Ivf.queries(spark, TestSpark.Sf)
     assert(qs.size >= 3, "need several queries or the split is vacuous")
     val mem = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Double)]
@@ -241,10 +245,11 @@ class PersistedIvfSpec extends AnyFunSuite {
       "the tinyint store bit-exactly, the driver query codec matches " +
       "the in-plan codec, serving reads no double vectors and prunes, " +
       "and store serving equals in-plan quantized answers row-for-row") {
-    import graft.queries.SimilarityQueries._
-    val (store, cents) = ivfBuildStoreQ8(spark, TestSpark.Sf, "ivfq8spec")
+    import graft.operators.Ivf._
+    val ix = build(spark, TestSpark.Sf, Codec.Q8, "ivfq8spec")
+    val store = ix.store
     // 1. store contents ≡ the in-plan codec applied to the raw vectors
-    val raw = SimilarityQueries.vectors(spark, TestSpark.Sf)
+    val raw = Ivf.vectors(spark, TestSpark.Sf)
       .withColumn("sq", quantizeScale(col("v")))
       .select(col("vec_id"), quantizeCodes(col("v"), col("sq")).as("cexp"))
       .withColumn("qn2exp", intDot(col("cexp"), col("cexp")))
@@ -259,7 +264,7 @@ class PersistedIvfSpec extends AnyFunSuite {
         s"store codes for vec $id diverge from the in-plan codec")
     }
     // 2. driver-side query quantization ≡ in-plan codec (the HALF_UP pin)
-    val qs = SimilarityQueries.ivfQueries(spark, TestSpark.Sf)
+    val qs = Ivf.queries(spark, TestSpark.Sf)
     val inPlan = raw.where(col("vec_id") < 10)
       .as[(Long, Seq[Long], Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     qs.foreach { case (id, qv) =>
@@ -267,7 +272,7 @@ class PersistedIvfSpec extends AnyFunSuite {
         s"driver codec for query $id diverges from the in-plan codec")
     }
     // 3. serving: prunes to probed cells, reads only (codes, norm)
-    val served = ivfServeQ8(store, cents, qs)
+    val served = serve(ix, qs)
     val got = served.as[(Long, Long, Int, Double)].collect().toSeq
     assert(got.nonEmpty && got.map(_._1).distinct.size == qs.length)
     val plan = served.queryExecution.executedPlan.toString
@@ -280,13 +285,13 @@ class PersistedIvfSpec extends AnyFunSuite {
         "— the 8x read cut is not real:\n" + plan)
     // 4. store serving ≡ in-plan quantized answers (same cells, codes
     // recomputed from raw vectors — catches any write/read drift)
-    val inPlanStore = SimilarityQueries.vectors(spark, TestSpark.Sf)
+    val inPlanStore = Ivf.vectors(spark, TestSpark.Sf)
       .join(store.select(col("list"), col("vec_id")), "vec_id")
       .withColumn("sq", quantizeScale(col("v")))
       .withColumn("cl", quantizeCodes(col("v"), col("sq")))
       .select(col("list"), col("vec_id"), col("cl").as("c"),
         intDot(col("cl"), col("cl")).as("qn2"))
-    val inPlanServed = ivfServeQ8(inPlanStore, cents, qs)
+    val inPlanServed = serve(ix.copy(store = inPlanStore), qs)
       .as[(Long, Long, Int, Double)].collect().toSeq
     assert(got == inPlanServed,
       "quantized-store serving diverged from in-plan quantized answers")
@@ -296,18 +301,20 @@ class PersistedIvfSpec extends AnyFunSuite {
       "row-for-row, the candidate scan is partition-pruned and reads " +
       "4 tinyint codes + a norm (never vectors), and the rerank is a " +
       "pushed point-read") {
-    import graft.queries.SimilarityQueries
     val inPlan = SparkEntry.queries("q_knn_ivf_pq")(spark, TestSpark.Sf)
       .as[(Long, Long, Int, Double, Boolean)].collect().toSeq
-    val store = SimilarityQueries.ivfBuildStorePq(spark, TestSpark.Sf, "ivfpqspec")
-    val served = SimilarityQueries.ivfServePqStore(spark, TestSpark.Sf, store)
+    val ix = Ivf.build(spark, TestSpark.Sf, Codec.Pq, "ivfpqspec")
+    val store = ix.store
+    val qs = Ivf.queries(spark, TestSpark.Sf)
+    val served = Ivf.gradeRows(Ivf.serve(ix, qs),
+      SparkEntry.queries("q_knn_brute")(spark, TestSpark.Sf)
+        .select(col("q_id"), col("n_id")))
     val got = served.as[(Long, Long, Int, Double, Boolean)].collect().toSeq
     assert(inPlan.nonEmpty && got == inPlan,
       "PQ-store serving diverged from the in-plan IVFPQ answers")
     // the ADC shortlist frame holds the store scan: pruned to probed
     // cells, reading tinyint codes, never a vector column
-    val shortFrame = SimilarityQueries.ivfPqStoreShortlist(
-      spark, TestSpark.Sf, store)
+    val shortFrame = Ivf.shortlist(Ivf.scored(ix, qs))
     shortFrame.count()
     val shortPlan = shortFrame.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(shortPlan).isDefined,
@@ -331,45 +338,6 @@ class PersistedIvfSpec extends AnyFunSuite {
       s"got: ${store.schema.simpleString}")
   }
 
-  test("STREAMED quantized serving equals the batch Q8 query across " +
-      "micro-batch splits, and recovers exactly-once through a " +
-      "mid-stream kill + checkpoint restart (T6/T7 for the Q8 store)") {
-    import java.nio.file.Files
-    val batch = graft.queries.SimilarityQueries.knnIvfQ8(spark, TestSpark.Sf)
-      .as[(Long, Long, Int, Double)].collect().toSeq.sortBy(r => (r._1, r._3))
-    val qs = graft.queries.SimilarityQueries.ivfQueries(spark, TestSpark.Sf)
-    assert(qs.length >= 5, "need several queries for a mid-stream kill")
-    // replayable source: one query vector per file, one file per
-    // trigger — many batch boundaries for the kill to land between
-    val srcDir = Files.createTempDirectory("q8src").toString
-    spark.createDataset(qs.toSeq).toDF("vec_id", "v")
-      .repartition(qs.length).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val ckpt = Files.createTempDirectory("q8ckpt").toString
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Double)]
-    def start() = graft.streaming.StreamingIvf.start(spark, src,
-        TestSpark.Sf, ckpt, mode = "q8") { out =>
-      got.synchronized {
-        got ++= out.as[(Long, Long, Int, Double)].collect(): Unit
-      }
-    }
-    val q1 = start()
-    StreamKill.afterCommit(spark, q1,
-      () => got.synchronized(got.map(_._1).distinct.size) >= 2)
-    val afterKill = got.synchronized(got.map(_._1).distinct.size)
-    assert(afterKill >= 1 && afterKill < qs.length,
-      s"kill landed outside mid-stream ($afterKill of ${qs.length} queries)")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    // foreachBatch is at-least-once: a replayed boundary batch re-emits
-    // IDENTICAL rows (serving is deterministic), so distinct = exactly-once
-    val streamed = got.synchronized(got.distinct.toSeq).sortBy(r => (r._1, r._3))
-    assert(streamed == batch,
-      "kill+restart quantized serving diverged from the batch Q8 answers")
-  }
-
   test("STREAMED PQ serving equals the batch store query across " +
       "micro-batch splits (the serving-mode matrix's third mode " +
       "through the one stream contract), on the grade-free 4-column " +
@@ -380,14 +348,14 @@ class PersistedIvfSpec extends AnyFunSuite {
       .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
       .as[(Long, Long, Int, Double)].collect().toSeq
       .sortBy(r => (r._1, r._3))
-    val qs = graft.queries.SimilarityQueries.ivfQueries(spark, TestSpark.Sf).toSeq
+    val qs = Ivf.queries(spark, TestSpark.Sf)
     val mem = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Int, Double)]
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-sivfpq").toString
     val q = graft.streaming.StreamingIvf.start(spark,
-        mem.toDF.toDF("vec_id", "v"), TestSpark.Sf, ckpt, mode = "pq") { out =>
+        mem.toDF.toDF("vec_id", "v"), TestSpark.Sf, ckpt, codec = Codec.Pq) { out =>
       // the sink schema must MATCH full/q8's — exactly 4 columns,
       // no grading column (r18 advice: pq used to emit 5)
       assert(out.columns.toSeq == Seq("q_id", "n_id", "rn", "sim"),
@@ -404,64 +372,23 @@ class PersistedIvfSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("STREAMED PQ serving recovers exactly-once through a mid-stream " +
-      "kill + checkpoint restart (T6/T7 symmetry with the Q8 leg)") {
-    import java.nio.file.Files
-    val batch = SparkEntry.queries("q_knn_ivf_pq_store")(spark, TestSpark.Sf)
-      .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
-      .as[(Long, Long, Int, Double)].collect().toSeq
-      .sortBy(r => (r._1, r._3))
-    val qs = graft.queries.SimilarityQueries.ivfQueries(spark, TestSpark.Sf)
-    assert(qs.length >= 5, "need several queries for a mid-stream kill")
-    val srcDir = Files.createTempDirectory("pqsrc").toString
-    spark.createDataset(qs.toSeq).toDF("vec_id", "v")
-      .repartition(qs.length).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val ckpt = Files.createTempDirectory("pqckpt").toString
-    val got = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, Long, Int, Double)]
-    def start() = graft.streaming.StreamingIvf.start(spark, src,
-        TestSpark.Sf, ckpt, mode = "pq") { out =>
-      got.synchronized {
-        got ++= out.as[(Long, Long, Int, Double)].collect(): Unit
-      }
-    }
-    val q1 = start()
-    StreamKill.afterCommit(spark, q1,
-      () => got.synchronized(got.map(_._1).distinct.size) >= 2)
-    val afterKill = got.synchronized(got.map(_._1).distinct.size)
-    assert(afterKill >= 1 && afterKill < qs.length,
-      s"kill landed outside mid-stream ($afterKill of ${qs.length} queries)")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val streamed = got.synchronized(got.distinct.toSeq).sortBy(r => (r._1, r._3))
-    assert(streamed == batch,
-      "kill+restart PQ serving diverged from the batch store answers")
-  }
-
   test("PERSISTED RESIDUAL-PQ store (r18 verdict item 1): store " +
       "serving equals the in-plan q_knn_ivf_pq_r answers row-for-row, " +
       "the candidate scan partition-prunes and reads tinyint codes " +
       "only, and the driver residual model matches the in-plan " +
       "codebook bit-for-bit") {
-    import graft.queries.SimilarityQueries
     val inPlan = SparkEntry.queries("q_knn_ivf_pq_r")(spark, TestSpark.Sf)
       .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
       .as[(Long, Long, Int, Double)].collect().toSeq
-    val store = SimilarityQueries.ivfBuildStorePqR(spark, TestSpark.Sf,
-      "ivfpqrspec")
-    val model = SimilarityQueries.loadPqRModel(spark, TestSpark.Sf)
-    val served = SimilarityQueries.ivfServePqLean(spark, TestSpark.Sf,
-      store, null, model)
+    val ix = Ivf.build(spark, TestSpark.Sf, Codec.PqR, "ivfpqrspec")
+    val qs = Ivf.queries(spark, TestSpark.Sf)
+    val served = Ivf.serve(ix, qs)
     val got = served.as[(Long, Long, Int, Double)].collect().toSeq
     assert(inPlan.nonEmpty && got == inPlan,
       "residual-PQ store serving diverged from the in-plan " +
         "q_knn_ivf_pq_r answers")
     // shortlist plan: pruned cells, tinyint codes, no vector columns
-    val shortFrame = SimilarityQueries.ivfPqStoreShortlist(
-      spark, TestSpark.Sf, store, null, model)
+    val shortFrame = Ivf.shortlist(Ivf.scored(ix, qs))
     shortFrame.count()
     val shortPlan = shortFrame.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(shortPlan).isDefined,
@@ -482,14 +409,14 @@ class PersistedIvfSpec extends AnyFunSuite {
       .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
       .as[(Long, Long, Int, Double)].collect().toSeq
       .sortBy(r => (r._1, r._3))
-    val qs = graft.queries.SimilarityQueries.ivfQueries(spark, TestSpark.Sf).toSeq
+    val qs = Ivf.queries(spark, TestSpark.Sf)
     val mem = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable
       .ArrayBuffer.empty[(Long, Long, Int, Double)]
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-sivfpqr").toString
     val q = graft.streaming.StreamingIvf.start(spark,
-        mem.toDF.toDF("vec_id", "v"), TestSpark.Sf, ckpt, mode = "pq_r") { out =>
+        mem.toDF.toDF("vec_id", "v"), TestSpark.Sf, ckpt, codec = Codec.PqR) { out =>
       assert(out.columns.toSeq == Seq("q_id", "n_id", "rn", "sim"),
         s"pq_r sink schema diverged: ${out.columns.toSeq}")
       got ++= out.as[(Long, Long, Int, Double)].collect()
@@ -505,50 +432,83 @@ class PersistedIvfSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("STREAMED RESIDUAL-PQ serving recovers exactly-once through a " +
-      "mid-stream kill + checkpoint restart (the q8/pq standard " +
-      "applied to the recommended mode)") {
-    import java.nio.file.Files
-    val batch = SparkEntry.queries("q_knn_ivf_pq_r")(spark, TestSpark.Sf)
-      .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
-      .as[(Long, Long, Int, Double)].collect().toSeq
-      .sortBy(r => (r._1, r._3))
-    val qs = graft.queries.SimilarityQueries.ivfQueries(spark, TestSpark.Sf)
-    assert(qs.length >= 5, "need several queries for a mid-stream kill")
-    val srcDir = Files.createTempDirectory("pqrsrc").toString
-    spark.createDataset(qs.toSeq).toDF("vec_id", "v")
-      .repartition(qs.length).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val ckpt = Files.createTempDirectory("pqrckpt").toString
-    val got = scala.collection.mutable
-      .ArrayBuffer.empty[(Long, Long, Int, Double)]
-    def start() = graft.streaming.StreamingIvf.start(spark, src,
-        TestSpark.Sf, ckpt, mode = "pq_r") { out =>
-      got.synchronized {
-        got ++= out.as[(Long, Long, Int, Double)].collect(): Unit
+  /** Each codec's batch twin, as served (q_id, n_id, rn, sim) rows. */
+  private val batchTwins: Seq[(Codec, () => org.apache.spark.sql.DataFrame)] = Seq(
+    Codec.Full -> (() => SimilarityQueries.knnIvfPersisted(spark, TestSpark.Sf)),
+    Codec.Q8 -> (() => SimilarityQueries.knnIvfQ8(spark, TestSpark.Sf)),
+    Codec.Pq -> (() => SparkEntry.queries("q_knn_ivf_pq_store")(spark, TestSpark.Sf)),
+    Codec.PqR -> (() => SparkEntry.queries("q_knn_ivf_pq_r")(spark, TestSpark.Sf)))
+
+  for ((codec, batchOf) <- batchTwins)
+    test(s"STREAMED ${codec.name} serving equals its batch query and " +
+        "recovers exactly-once through a mid-stream kill + checkpoint " +
+        "restart, on the shared 4-column sink schema") {
+      import java.nio.file.Files
+      val batch = batchOf()
+        .select(col("q_id"), col("n_id"), col("rn"), col("sim"))
+        .as[(Long, Long, Int, Double)].collect().toSeq
+        .sortBy(r => (r._1, r._3))
+      val qs = Ivf.queries(spark, TestSpark.Sf)
+      assert(qs.length >= 5, "need several queries for a mid-stream kill")
+      // replayable source: one query vector per file, one file per
+      // trigger — many batch boundaries for the kill to land between
+      val srcDir = Files.createTempDirectory(s"ivf${codec.name}src").toString
+      spark.createDataset(qs).toDF("vec_id", "v")
+        .repartition(qs.length).write.mode("overwrite").parquet(srcDir)
+      val schema = spark.read.parquet(srcDir).schema
+      def src = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val ckpt = Files.createTempDirectory(s"ivf${codec.name}ckpt").toString
+      val got = scala.collection.mutable
+        .ArrayBuffer.empty[(Long, Long, Int, Double)]
+      def start() = graft.streaming.StreamingIvf.start(spark, src,
+          TestSpark.Sf, ckpt, codec = codec) { out =>
+        assert(out.columns.toSeq == Seq("q_id", "n_id", "rn", "sim"),
+          s"${codec.name} sink schema diverged: ${out.columns.toSeq}")
+        got.synchronized {
+          got ++= out.as[(Long, Long, Int, Double)].collect(): Unit
+        }
       }
+      val q1 = start()
+      StreamKill.afterCommit(spark, q1,
+        () => got.synchronized(got.map(_._1).distinct.size) >= 2)
+      val afterKill = got.synchronized(got.map(_._1).distinct.size)
+      assert(afterKill >= 1 && afterKill < qs.length,
+        s"kill landed outside mid-stream ($afterKill of ${qs.length} queries)")
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      // foreachBatch is at-least-once: a replayed boundary batch
+      // re-emits IDENTICAL rows (serving is deterministic), so
+      // distinct = exactly-once
+      val streamed = got.synchronized(got.distinct.toSeq).sortBy(r => (r._1, r._3))
+      assert(streamed == batch,
+        s"kill+restart ${codec.name} serving diverged from the batch answers")
     }
-    val q1 = start()
-    StreamKill.afterCommit(spark, q1,
-      () => got.synchronized(got.map(_._1).distinct.size) >= 2)
-    val afterKill = got.synchronized(got.map(_._1).distinct.size)
-    assert(afterKill >= 1 && afterKill < qs.length,
-      s"kill landed outside mid-stream ($afterKill of ${qs.length} queries)")
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val streamed = got.synchronized(got.distinct.toSeq).sortBy(r => (r._1, r._3))
-    assert(streamed == batch,
-      "kill+restart residual-PQ serving diverged from the batch answers")
-  }
+
+  for (codec <- Codec.all)
+    test(s"${codec.name} serving answers a batch that repeats a query " +
+        "once, and fails by name when one vec_id carries two vectors") {
+      val ix = Ivf.build(spark, TestSpark.Sf, codec, s"ivfdup${codec.name}")
+      val qs = Ivf.queries(spark, TestSpark.Sf)
+      def rows(batch: Seq[(Long, Seq[Double])]) =
+        Ivf.serve(ix, batch).as[(Long, Long, Int, Double)].collect().toSeq
+      val once = rows(qs.take(2))
+      assert(once.map(_._1).distinct.size == 2 && once.size == 10)
+      assert(rows(Seq(qs.head, qs.head, qs(1), qs.head)) == once,
+        "a repeated query id corrupted the served top-5")
+      val e = intercept[IllegalArgumentException] {
+        rows(Seq(qs.head, (qs.head._1, qs(1)._2)))
+      }
+      assert(e.getMessage.contains(s"query vec_id ${qs.head._1} carries two " +
+        "different vectors"), e.getMessage)
+    }
 
   test("driver-batch guard: a query micro-batch past the cap fails " +
       "LOUDLY naming MaxBatchQueries (serving stream, not a corpus " +
       "channel)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val qs = SimilarityQueries.ivfQueries(spark, TestSpark.Sf).toSeq
+    val qs = Ivf.queries(spark, TestSpark.Sf)
     assert(qs.size >= 4, "need enough queries to trip a small cap")
     val mem = MemoryStream[(Long, Seq[Double])]
     val ckpt = java.nio.file.Files

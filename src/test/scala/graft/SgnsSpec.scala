@@ -113,6 +113,27 @@ class SgnsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("need at least 2 nodes, got 0"), e.getMessage)
   }
 
+  test("a pairs frame whose rows change between fit's scans fails with " +
+      "the named determinism error, not a raw NullPointerException") {
+    // every row's context reads true on the vocabulary scan and null on
+    // every later scan (the skeleton build)
+    SgnsFlakyContext.calls.set(0L)
+    val n = toyPairs.size.toLong
+    val flaky = udf { (c: Long) =>
+      if (SgnsFlakyContext.calls.incrementAndGet() > n) null
+      else java.lang.Long.valueOf(c)
+    }.asNondeterministic()
+    val pairs = toyPairs.toDF("center", "ctx", "wt")
+      .select(col("center"), flaky(col("ctx")).as("context"), col("wt"))
+    val e = intercept[Exception] {
+      Sgns.fit(pairs, dim = Dim, iters = 1, negK = NegK, lr = Lr)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").toSeq
+    assert(msgs.exists(_.contains("fit requires a deterministic pairs frame")),
+      msgs.mkString("\n"))
+  }
+
   test("training loss decreases") {
     val (_, losses) = Sgns.fit(
       toyPairs.toDF("center", "context", "wt"), dim = Dim, iters = 6,
@@ -183,4 +204,10 @@ class SgnsSpec extends AnyFunSuite {
     assert(coMean > rndMean,
       s"no separation on the biased corpus: co-occur mean $coMean vs random mean $rndMean")
   }
+}
+
+/** Driver-JVM call counter for the nondeterministic-pairs spec (an
+  * object, so local-mode tasks share it instead of a serialized copy). */
+object SgnsFlakyContext {
+  val calls = new java.util.concurrent.atomic.AtomicLong
 }
