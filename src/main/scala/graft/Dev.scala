@@ -76,46 +76,55 @@ object Dev {
     f"CALIB $label cpu=${CalibProbe.ms()}%.1f par=${CalibProbe.msParallel()}%.1f " +
       f"mem=${CalibProbe.msMem()}%.1f ms"
 
-  /** One timed action with the jobs and stages it ran. */
-  private final case class Pass(secs: Double, rows: Long,
-      jobs: Seq[(Int, Long, Int)], stages: Seq[StageInfo]) {
+  private final case class Job(id: Int, startMs: Long, wallMs: Long, stages: Int)
+
+  /** One timed construction and action with the jobs and stages they
+    * ran; `construct` counts the jobs that started while the query was
+    * being built. */
+  private final case class Pass(secs: Double, rows: Long, construct: Int,
+      jobs: Seq[Job], stages: Seq[StageInfo]) {
     def tasks: Int = stages.map(_.numTasks).sum
     def execRunMs: Long = stages.map(_.taskMetrics.executorRunTime).sum
   }
 
-  /** Collects (job id, wall ms, stage count) per job and the completed
-    * stages of the actions run inside [[record]]. */
+  /** Collects the jobs and completed stages of the queries built and
+    * run inside [[record]]. */
   private final class JobLog extends SparkListener {
     private val started = new ConcurrentHashMap[Int, (Long, Int)]()
-    private val jobs = new ConcurrentLinkedQueue[(Int, Long, Int)]()
+    private val jobs = new ConcurrentLinkedQueue[Job]()
     private val stages = new ConcurrentLinkedQueue[StageInfo]()
 
     override def onJobStart(j: SparkListenerJobStart): Unit =
       started.put(j.jobId, (j.time, j.stageInfos.size)): Unit
     override def onJobEnd(j: SparkListenerJobEnd): Unit =
       Option(started.remove(j.jobId)).foreach { case (t0, n) =>
-        jobs.add((j.jobId, j.time - t0, n)): Unit
+        jobs.add(Job(j.jobId, t0, j.time - t0, n)): Unit
       }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       stages.add(s.stageInfo): Unit
 
-    def record(spark: SparkSession)(action: => Long): Pass = {
+    def record(spark: SparkSession)(build: => DataFrame): Pass = {
       jobs.clear(); stages.clear()
       val t0 = System.nanoTime()
-      val rows = action
+      val df = build
+      val built = System.currentTimeMillis() // the clock of job start events
+      val rows = df.count()
       val secs = (System.nanoTime() - t0) / 1e9
       scbridge.drainListenerBus(spark.sparkContext) // the bus is async
-      Pass(secs, rows, jobs.asScala.toSeq, stages.asScala.toSeq)
+      val js = jobs.asScala.toSeq
+      Pass(secs, rows, js.count(_.startMs < built), js, stages.asScala.toSeq)
     }
   }
 
   /** Bench's protocol for named queries: warm-up at sf0.001, then two
     * timed `count()` passes over all of them, keeping each query's
     * minimum, with the storage a query left behind dropped after it.
-    * Prints the min pass's jobs, stages, tasks and executor run time
-    * plus its ten slowest jobs and stages — wall far above
-    * execRun/cores over many small jobs is scheduling-bound — between
-    * two readings of the three [[CalibProbe]] host-load scalars. */
+    * Prints the min pass's jobs (`construct=` of them started while
+    * the query was being built, before its `count()`), stages, tasks
+    * and executor run time plus its ten slowest jobs and stages —
+    * wall far above execRun/cores over many small jobs is
+    * scheduling-bound — between two readings of the three
+    * [[CalibProbe]] host-load scalars. */
   def time(spark: SparkSession, sfDir: String, queries: Seq[String]): Unit = {
     val fns = queries.map(n => n -> query(n))
     val sc = spark.sparkContext
@@ -126,7 +135,7 @@ object Dev {
     val passes =
       try Seq.fill(2)(fns.map { case (n, fn) =>
         val priorRdds = sc.getPersistentRDDs.keySet
-        val p = log.record(spark)(fn(spark, sfDir).count())
+        val p = log.record(spark)(fn(spark, sfDir))
         sc.getPersistentRDDs.filterNot { case (id, _) => priorRdds.contains(id) }
           .values.foreach(_.unpersist(blocking = false))
         n -> p
@@ -136,10 +145,11 @@ object Dev {
       val (p1, p2) = (passes(0)(n), passes(1)(n))
       val best = if (p2.secs < p1.secs) p2 else p1
       println(f"TIME $n%-26s min=${best.secs}%6.2f s (p1=${p1.secs}%.2f p2=${p2.secs}%.2f) " +
-        f"jobs=${best.jobs.size}%3d stages=${best.stages.size}%3d tasks=${best.tasks}%5d " +
+        f"jobs=${best.jobs.size}%3d construct=${best.construct}%3d " +
+        f"stages=${best.stages.size}%3d tasks=${best.tasks}%5d " +
         f"execRun=${best.execRunMs / 1000.0}%7.2f s rows=${best.rows}")
-      best.jobs.sortBy(-_._2).take(10).foreach { case (id, ms, ns) =>
-        println(f"        job=$id%4d wall=${ms / 1000.0}%6.2fs stages=$ns%3d")
+      best.jobs.sortBy(-_.wallMs).take(10).foreach { j =>
+        println(f"        job=${j.id}%4d wall=${j.wallMs / 1000.0}%6.2fs stages=${j.stages}%3d")
       }
       best.stages.sortBy(-_.taskMetrics.executorRunTime).take(10).foreach { s =>
         val wall = (for (a <- s.completionTime; b <- s.submissionTime) yield a - b).getOrElse(0L)

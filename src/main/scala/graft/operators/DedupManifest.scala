@@ -114,12 +114,13 @@ object DedupManifest {
     * [[graft.Fence]]). [[read]] resolves the highest version — the
     * store a subsequent ingest consumes. Versions that fell out of
     * the [[KeepVersions]] window are deleted once the new write is
-    * durable. */
+    * durable. The read declares the schema `df` was written with, so
+    * the round trip starts no schema-inference job. */
   def persist(df: DataFrame, path: String): DataFrame = {
     val p = s"$path/v${version.incrementAndGet()}"
     df.write.mode("overwrite").parquet(p)
     reclaim(df, path, p)
-    df.sparkSession.read.parquet(p)
+    df.sparkSession.read.schema(df.schema).parquet(p)
   }
 
   /** [[persist]] with a PARTITIONED layout — one directory per value

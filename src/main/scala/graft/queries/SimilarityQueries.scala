@@ -1119,11 +1119,10 @@ object SimilarityQueries {
     // Key = lineitem count (SF-identifying; embedding counts COLLIDE
     // between sf0.001 and sf0.01 — see [[IvfNprobeDumpDir]])
     val corpusKey = t(s, d, "lineitem").count()
-    publishTrace(served, IvfNprobeDumpDir, corpusKey)
     // grade FROM the dump — the engine verdict consumes the same
     // trace the oracle reads, so the two sides cannot see different
     // servings
-    val trace = spark.read.parquet(s"$IvfNprobeDumpDir/c$corpusKey")
+    val trace = publishTrace(served, IvfNprobeDumpDir, corpusKey)
     // fenced (r19): the truth set is consumed TWICE below — the
     // denominator count and the grading join's broadcast build — and
     // each evaluation of the un-fenced plan re-ran the full
@@ -2132,16 +2131,19 @@ object SimilarityQueries {
     * the FINAL dir remains (rename-onto-existing is not atomic on
     * HDFS-style stores); it is key-scoped, so after the r18
     * SF-keying fix only a concurrent same-SF reader can see it — the
-    * sweep protocol never runs two same-SF grades concurrently. */
-  private def publishTrace(df: DataFrame, root: String, key: Long): Unit = {
+    * sweep protocol never runs two same-SF grades concurrently.
+    *
+    * Returns the published trace, read with the schema it was
+    * written with (no schema-inference job). */
+  private def publishTrace(df: DataFrame, root: String, key: Long): DataFrame = {
     val s = df.sparkSession
     val hconf = s.sessionState.newHadoopConf()
     val finalPath = new org.apache.hadoop.fs.Path(s"$root/c$key")
     val stageRoot = new org.apache.hadoop.fs.Path(s"$root/.stage")
     val tmpPath = new org.apache.hadoop.fs.Path(s"$root/.stage/c$key")
     val fs = finalPath.getFileSystem(hconf)
-    df.withColumn("corpus_key", lit(key))
-      .coalesce(1).write.mode("overwrite").parquet(tmpPath.toString)
+    val trace = df.withColumn("corpus_key", lit(key))
+    trace.coalesce(1).write.mode("overwrite").parquet(tmpPath.toString)
     // a pre-r19 run may have left a glob-visible `.tmp_c<key>` sibling
     // carrying this corpus_key — remove it before the key goes live
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/.tmp_c$key"), true): Unit
@@ -2161,6 +2163,7 @@ object SimilarityQueries {
       } else if (nm != s"c$key" && st.getModificationTime < staleCutoff)
         fs.delete(st.getPath, true): Unit
     }
+    s.read.schema(trace.schema).parquet(finalPath.toString)
   }
 
   /** QUANTIZED-STORE ANN SERVING, graded (r17 verdict item 1): build
@@ -2210,8 +2213,7 @@ object SimilarityQueries {
   private def gradeTrace(s: SparkSession, d: String, served: DataFrame,
       root: String): DataFrame = {
     val corpusKey = t(s, d, "lineitem").count()
-    publishTrace(served, root, corpusKey)
-    gradeQueries(s.read.parquet(s"$root/c$corpusKey"),
+    gradeQueries(publishTrace(served, root, corpusKey),
         qKnnBrute.fn(s, d).select(col("q_id"), col("n_id")))
       .orderBy(col("q_id"))
   }

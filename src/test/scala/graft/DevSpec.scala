@@ -31,7 +31,7 @@ class DevSpec extends AnyFunSuite {
     assert(lines.head.startsWith("CALIB pre cpu="), lines.head)
     assert(lines.last.startsWith("CALIB post cpu="), lines.last)
     val t = line(lines, s"TIME $Q")
-    assert(raw"min=\s*[\d.]+ s \(p1=[\d.]+ p2=[\d.]+\) jobs=\s*[1-9]\d* stages=\s*\d+ tasks=\s*[1-9]\d* execRun=\s*[\d.]+ s rows=$rows$$".r
+    assert(raw"min=\s*[\d.]+ s \(p1=[\d.]+ p2=[\d.]+\) jobs=\s*[1-9]\d* construct=\s*\d+ stages=\s*\d+ tasks=\s*[1-9]\d* execRun=\s*[\d.]+ s rows=$rows$$".r
       .findFirstIn(t).nonEmpty, t)
     assert(lines.exists(_.trim.startsWith("job=")), lines.mkString("\n"))
   }
