@@ -1,4 +1,16 @@
 package graft
+
+/** The per-round driver metric: every registry query at sf0.1, min of
+  * two timed passes, plus the streaming and serving probes, printed as
+  * one JSON line last (`SPARK_GRAFT_SF_DIR` picks the tables). A query
+  * is timed as its construction plus `count()`.
+  *
+  * Blind spot: `count()` plans away each query's final ORDER BY (and
+  * every column a count does not need), so neither this total nor
+  * BenchGate's per-query gate sees the cost of the final sort — not the
+  * range-sampling job [[SmallRootSort]] removes, nor a later regression
+  * there. The whole ordered result is timed by `graft.Dev time`
+  * (`collect()`) and by perfbench's `analytics` workload. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

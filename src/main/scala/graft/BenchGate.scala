@@ -28,6 +28,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *  - queries new since the canonical are listed informationally and
   *    auto-added on `--record`.
   *
+  * The table it gates times `count()` per query, which plans away the
+  * final ORDER BY, so a regression in a query's final sort passes this
+  * gate unseen (see [[Bench]]); `graft.Dev time` measures it.
+  *
   * Usage: `runMain graft.BenchGate [latest [canonical]]`, default
   * `bench/BENCH_full_latest.json` vs `bench/BENCH_canonical.json`;
   * pass `--record` (alone or after paths) to overwrite the canonical

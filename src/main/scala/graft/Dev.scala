@@ -22,8 +22,8 @@ object Dev {
 
   val Usage: String =
     """usage: graft.Dev <command> [args]
-      |  time <sfDir> <q...>                  Bench protocol (sf0.001 warm-up, min of two passes), job/stage breakdown, calibration bracket
-      |  plan <q,q|all> [sfDir]               formatted explain
+      |  time <sfDir> <q...>                  min of two collect() passes after an sf0.001 warm-up, job/stage breakdown, calibration bracket
+      |  plan <q,q|all> [sfDir]               formatted explain; builds each query, so it runs the query's construction-time work (slow for `all`)
       |  audit [sfDir] [q,q]                  one-line plan-shape counts per query
       |  exec <sfDir> <q>                     run the query's own plan once; per-operator metrics, codegen method sizes
       |  run <sfDir> <q> [maxRows]            print the result rows
@@ -108,7 +108,7 @@ object Dev {
       val t0 = System.nanoTime()
       val df = build
       val built = System.currentTimeMillis() // the clock of job start events
-      val rows = df.count()
+      val rows = df.collect().length.toLong
       val secs = (System.nanoTime() - t0) / 1e9
       scbridge.drainListenerBus(spark.sparkContext) // the bus is async
       val js = jobs.asScala.toSeq
@@ -116,20 +116,24 @@ object Dev {
     }
   }
 
-  /** Bench's protocol for named queries: warm-up at sf0.001, then two
-    * timed `count()` passes over all of them, keeping each query's
-    * minimum, with the storage a query left behind dropped after it.
-    * Prints the min pass's jobs (`construct=` of them started while
-    * the query was being built, before its `count()`), stages, tasks
-    * and executor run time plus its ten slowest jobs and stages —
-    * wall far above execRun/cores over many small jobs is
+  /** Bench's protocol for named queries, materialized as perfbench's
+    * analytics workload does: warm-up at sf0.001, then two timed passes
+    * over all of them, each building the query and `collect()`ing its
+    * whole ordered result, keeping each query's minimum, with the
+    * storage a query left behind dropped after it. Not `count()`, as
+    * Bench times: `count()` plans away the final ORDER BY (and every
+    * column no count needs), so it neither shows nor guards the cost of
+    * the final sort. Prints the min pass's jobs (`construct=` of them
+    * started while the query was being built, before its `collect()`),
+    * stages, tasks and executor run time plus its ten slowest jobs and
+    * stages — wall far above execRun/cores over many small jobs is
     * scheduling-bound — between two readings of the three
     * [[CalibProbe]] host-load scalars. */
   def time(spark: SparkSession, sfDir: String, queries: Seq[String]): Unit = {
     val fns = queries.map(n => n -> query(n))
     val sc = spark.sparkContext
     println(calib("pre"))
-    fns.foreach { case (_, fn) => fn(spark, Sf0001).count(): Unit }
+    fns.foreach { case (_, fn) => fn(spark, Sf0001).collect(): Unit }
     val log = new JobLog
     sc.addSparkListener(log)
     val passes =
@@ -161,7 +165,11 @@ object Dev {
     println(calib("post"))
   }
 
-  /** Formatted explain per query (`all` = the whole registry). */
+  /** Formatted explain per query (`all` = the whole registry). Not a
+    * cheap dump: building a query runs its construction-time work —
+    * fences, persisted ANN and dedup stores, bucketed tables — so `all`
+    * at sf0.001 runs for tens of minutes (two concurrent runs on 4
+    * cores took about 70). */
   def plan(spark: SparkSession, list: String, sfDir: String): Unit =
     names(list).foreach { n =>
       println(s"===== $n =====")

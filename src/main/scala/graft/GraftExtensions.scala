@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, RLike}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,13 +24,22 @@ import graft.functions.GraftExpressions._
   *     the memoizing [[MemoRLike]] form — a user writing the obvious
   *     `col("ua").rlike(BotPatterns.Joined)` silently gets the
   *     per-distinct-value cached evaluation the flagship uses
-  *     (identical semantics, pinned by GraftExtensionsSpec).
+  *     (identical semantics, pinned by GraftExtensionsSpec);
+  *  3. injects [[SmallRootSort]] twice: as an optimizer rule (the
+  *     static size estimate) and as an AQE runtime optimizer rule (the
+  *     same check once the sort's input stages have materialized). It
+  *     runs a small final ORDER BY in one partition, so the sort plans
+  *     without the range exchange and its bound-sampling job
+  *     (RootSortSpec).
   *
-  * This is deliberately the WHOLE extensions footprint: every graft
+  * These two rules are the whole logical-plan footprint: every graft
   * operator is expressible through the declarative DataFrame API plus
-  * these scalar expressions, so there is no custom LogicalPlan /
+  * these scalar expressions, so there is no custom LogicalPlan node or
   * Strategy to inject — Catalyst's own planning covers the operator
-  * semantics (SURVEY §7.1 design stance).
+  * semantics (SURVEY §7.1 design stance). The rules only choose
+  * between plans Catalyst could build from the same query, and leave
+  * its results unchanged. The one remaining hook is the
+  * session-construction check below.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -75,6 +86,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "memo_rlike(str, pattern) requires a literal pattern")
     })
     ext.injectOptimizerRule(_ => MemoizeBotRlike)
+    ext.injectOptimizerRule(_ => SmallRootSort)
+    ext.injectRuntimeOptimizerRule(_ => SmallRootSort)
     // Huge-codegen guard for sessions WE don't build (a user's
     // cluster spark-submit that installs this extension): the
     // flagship's fused stage generates a ~8.2 KB method, past
@@ -110,4 +123,58 @@ object MemoizeBotRlike extends Rule[LogicalPlan] {
           if p.toString == BotPatterns.Joined =>
         MemoRLike(child, p.toString)
     }
+}
+
+/** Run a small final ORDER BY in one partition. A global `Sort` at the
+  * plan root (or under the root `Project`) whose input is estimated at
+  * most `spark.sql.autoBroadcastJoinThreshold` bytes gets the input
+  * `Repartition(1, shuffle = false)`. That plans as `CoalesceExec(1)`,
+  * whose single partition already satisfies the sort's ordered
+  * distribution, so no range exchange is planned. Under AQE a range
+  * exchange costs three jobs: the RangePartitioner's sampling job,
+  * which re-runs the whole pre-sort pipeline, the shuffle-map stage and
+  * the result stage. One partition costs one.
+  *
+  * "Small" reuses the broadcast threshold: an input that size is
+  * already shipped whole to every executor of a join, so sorting it in
+  * one task is in scale; a threshold of 0 or less turns the rewrite off.
+  * The optimizer's estimate of a join is often far too high (the
+  * product of its sides), so the same rule also runs in AQE's runtime
+  * optimizer, where materialized stages carry their measured sizes.
+  *
+  * Never rewritten: streaming plans, sorts below the root (a write's
+  * query, `sortWithinPartitions`, `orderBy(...).limit(n)`, which plans
+  * as TakeOrderedAndProject) and large inputs, which keep range
+  * partitioning across the cluster. */
+object SmallRootSort extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case _ if plan.isStreaming => plan
+    case s: Sort => onePartition(s).getOrElse(plan)
+    case p @ Project(_, s: Sort) => onePartition(s).fold(plan)(o => p.copy(child = o))
+    case _ => plan
+  }
+
+  private def onePartition(s: Sort): Option[Sort] = s.child match {
+    case Repartition(1, _, _) => None
+    case c if s.global && small(c) && !rangeShuffled(c) =>
+      Some(s.copy(child = Repartition(1, shuffle = false, c)))
+    case _ => None
+  }
+
+  /** Under AQE, the sort's own range exchange has already run: its
+    * input's estimate stayed large until that stage measured it (a join
+    * is estimated as the product of its sides), and one partition now
+    * would save no job. */
+  private def rangeShuffled(p: LogicalPlan): Boolean = p.exists {
+    case q: LogicalQueryStage => q.physicalPlan.exists {
+      case s: ShuffleQueryStageExec => s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    case _ => false
+  }
+
+  private def small(p: LogicalPlan): Boolean = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    threshold > 0 && p.stats.sizeInBytes <= threshold
+  }
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.filters.BotPatterns
 import graft.functions.GraftExpressions.MemoRLike
 
-/** The SparkSessionExtensions surface: SQL function registration and
-  * the bot-rlike memoization rule. */
+/** The SparkSessionExtensions surface: SQL function registration, the
+  * bot-rlike memoization rule and the two injections of the small
+  * root sort rule (its behaviour is RootSortSpec's). */
 class GraftExtensionsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -75,5 +76,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       case p if p.expressions.exists(_.exists(_.isInstanceOf[MemoRLike])) => p
     }
     assert(memoized.isEmpty)
+  }
+
+  test("SmallRootSort is injected as an optimizer and an AQE runtime optimizer rule") {
+    val state = spark.sessionState
+    assert(state.optimizer.extendedOperatorOptimizationRules.contains(SmallRootSort))
+    assert(state.adaptiveRulesHolder.runtimeOptimizerRules.contains(SmallRootSort))
   }
 }

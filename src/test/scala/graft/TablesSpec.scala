@@ -2,15 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graft.scbridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType, TimestampNTZType, TimestampType}
@@ -24,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the annotation, and the resolve-once schema cache: a table's schema
   * is inferred once per session and again only when its files change. */
 class TablesSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{jobs, spark}
 
   test("TIMESTAMP_NTZ columns normalize to session-TZ TimestampType with identical micros") {
     val dir = Files.createTempDirectory("graft-tables").toString
@@ -53,26 +50,6 @@ class TablesSpec extends AnyFunSuite {
     val docs = Tables(spark, TestSpark.Sf, "documents")
     assert(!docs.schema.exists(_.dataType == TimestampNTZType))
     assert(docs.count() > 0)
-  }
-
-  /** `body`'s result and the Spark jobs it started from this thread
-    * (its own job group, so other work on the shared context is not
-    * counted), with the listener bus drained before counting. */
-  private def jobs[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try {
-      val a = body
-      scbridge.drainListenerBus(sc)
-      (a, n.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   /** A parquet file written without Spark: only `message`'s types. */
