@@ -844,6 +844,56 @@ object GraftExpressions {
 
   def vec_lookup(key: Column, holder: VecBcHolder): Column =
     bridge.column(BcVecLookup(bridge.expression(key), holder))
+
+  /** A dimension version's lookup: string key → the row of its
+    * remaining columns, built and broadcast once per version
+    * (`streaming.DimensionSnapshot`). */
+  type DimMap = java.util.HashMap[UTF8String, InternalRow]
+
+  /** dim_lookup(key) — the probe side of a left-outer equi-join on a
+    * string key against a broadcast map, as one codegen'd hash probe
+    * per row: the key must be a string (the map holds UTF8String
+    * keys); `dataType` is the struct of the dimension's non-key
+    * columns, null on a miss or a null key (the join's unmatched
+    * row). It holds the version's `Broadcast` itself, not a
+    * [[VecBcHolder]]: a dimension version never changes, so there is
+    * nothing to swap, and a batch enriched through it plans no
+    * broadcast exchange — the map ships with the task binary as a
+    * broadcast stub, once per executor. The caller destroys the
+    * broadcast when the version retires. */
+  case class BcDimLookup(child: Expression,
+      bc: org.apache.spark.broadcast.Broadcast[DimMap], dataType: StructType)
+      extends UnaryExpression {
+
+    // never foldable, like BcVecLookup: a literal key must not freeze
+    // one version's row into the plan at optimization time
+    override def foldable: Boolean = false
+
+    override def nullable: Boolean = true
+
+    // the plan shows the key and the broadcast, not the whole row type
+    override protected def stringArgs: Iterator[Any] = Iterator(child, bc)
+
+    override def nullSafeEval(k: Any): Any = bc.value.get(k)
+
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val bRef = ctx.addReferenceObj("dimBc", bc,
+        "org.apache.spark.broadcast.Broadcast")
+      val mapVar = ctx.addMutableState("java.util.HashMap", "dimMap",
+        v => s"$v = (java.util.HashMap) $bRef.value();")
+      nullSafeCodeGen(ctx, ev, k => s"""
+        |${ev.value} = (InternalRow) $mapVar.get($k);
+        |${ev.isNull} = ${ev.value} == null;
+      """.stripMargin)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  def dim_lookup(key: Column, bc: org.apache.spark.broadcast.Broadcast[DimMap],
+      valueType: StructType): Column =
+    bridge.column(BcDimLookup(bridge.expression(key), bc, valueType))
 }
 
 /** Mutable broadcast slot for [[GraftExpressions.BcVecLookup]] — the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.parse.Clf
 import graft.filters.LogFilters
+import graft.streaming.DimensionSnapshot
 
 /** The flagship query — the reference's whole batch pipeline
   * (`server.clj:37-48` `log->edn`): scan → filter cascade → project →
@@ -106,9 +107,15 @@ object Flagship {
       min_by(col("user_id"), col("event_id")).cast("long").as("first_user"))
 
   /** J1 — stream–static left-outer enrichment join, dimension
-    * broadcast (`server.clj:12-14` + `wbdb.clj:30-40`). */
+    * broadcast (`server.clj:12-14` + `wbdb.clj:30-40`). A live
+    * `DimensionSnapshot` version (its `pinned` frame) is probed
+    * through the lookup it broadcast once, with the join's output;
+    * any other frame is broadcast into the join on every execution. */
   def enrich(requests: DataFrame, dim: DataFrame): DataFrame =
-    requests.join(broadcast(dim), Seq("lemma"), "left_outer")
+    DimensionSnapshot.versionOf(dim) match {
+      case Some(v) => v.enrich(requests)
+      case None => requests.join(broadcast(dim), Seq("lemma"), "left_outer")
+    }
 
   def apply(spark: SparkSession, dir: String): DataFrame = {
     val events = Tables(spark, dir, "events")

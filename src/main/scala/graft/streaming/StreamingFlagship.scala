@@ -32,11 +32,14 @@ object StreamingFlagship {
       .text(dir)
       .withColumnRenamed("value", "line")
 
-  /** Stream side of the pipeline: identical plan to batch. The
-    * dimension is a *static* DataFrame — Spark re-evaluates it per
-    * micro-batch, which refreshes like the reference's 12 h cycle
-    * (T5) but does NOT pin a version; for the reference's atomic-swap
-    * consistency guarantee use [[DimensionSnapshot]]. */
+  /** Stream side of the pipeline: identical plan to batch. A plain
+    * *static* dimension DataFrame is re-evaluated and re-broadcast
+    * into the join every micro-batch, which refreshes like the
+    * reference's 12 h cycle (T5) but does NOT pin a version. Given a
+    * [[DimensionSnapshot]]'s `pinned` frame, every batch instead
+    * probes that version's lookup, broadcast once when the version
+    * was built — the reference's atomic-swap consistency guarantee,
+    * with no per-batch broadcast. */
   def enriched(lines: DataFrame, dim: DataFrame): DataFrame =
     Flagship.enrich(Flagship.logToRequests(lines), dim)
 
